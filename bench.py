@@ -59,8 +59,7 @@ def sf_from_dir(sf_dir: str) -> float:
 
 def _steady(metrics: list[dict]) -> float:
     """Mean per-superstep seconds excluding the warm-up first superstep
-    (cached-structure materialization) and the final one (it carries the
-    convergence-check pass when check_every batches them)."""
+    (cached-structure materialization) and the final one."""
     secs = [m["seconds"] for m in metrics]
     if len(secs) >= 3:
         secs = secs[1:-1]

@@ -332,6 +332,7 @@ def fsm(
     ({level, candidates, survivors, seconds}) — the bench harness's level
     breakdown (the reference reports per-size timings, README.md:100-105).
     """
+    from peregrine_spark.session import pinned_conf
     from peregrine_spark.supersteps.engine import (
         auto_shuffle_partitions,
         shuffle_partitions,
@@ -381,16 +382,13 @@ def fsm(
         seen.setdefault(canonical_form(g), g)
     candidates = list(seen.values())
 
-    if cap_broadcast and (bcast_before == "" or int(bcast_before) > int(cap_bytes)):
-        spark.conf.set(bcast_key, cap_bytes)
-    try:
+    cap = cap_broadcast and (bcast_before == "" or int(bcast_before) > int(cap_bytes))
+    with pinned_conf(spark, bcast_key, cap_bytes if cap else None):
         return _fsm_loop(
             spark, candidates, sym, lab, edges, support, max_vertices,
             max_edges, discover, level_chunk, all_labels, n_part,
             level_metrics, shuffle_partitions,
         )
-    finally:
-        spark.conf.set(bcast_key, bcast_before)
 
 
 def _fsm_loop(

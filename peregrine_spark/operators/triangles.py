@@ -25,6 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from peregrine_spark.session import release_checkpoint
+
+# through the package, not ``supersteps.engine``: importing a submodule
+# whose package another thread is still first-importing takes the two
+# import locks in the opposite order and can deadlock (_DeadlockError)
+from peregrine_spark.supersteps import SuperstepEngine
+
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """Orient canonical (src<dst) edges from the lower-degree endpoint to the
@@ -91,68 +98,60 @@ def ktruss(edges: DataFrame, k: int, max_iters: int = 100) -> DataFrame:
     closes at least k−2 triangles — of a canonical (src<dst) edge table.
 
     The triangle analogue of :func:`peregrine_spark.graph.build.kcore`'s
-    degree peel, and the same Spark shape: per round, list triangles with
-    the degree-oriented two-join (sqrt-bounded fan-out, hub-skew-safe on
-    degree-descending ids), stack each triangle's three canonical edges,
-    count support per edge with one partial-agg groupBy, and left_semi the
-    surviving edges. The edge set shrinks monotonically, so fixpoint is
-    detected by count equality; every round eagerly ``localCheckpoint``s
-    the survivors and releases the previous round's blocks (plan
-    truncation — a persist would grow lineage superlinearly over tens of
-    peel rounds). Edges in no triangle have support 0 and drop in round
-    one. Standard use: community cores and as an exact reducer for clique
-    queries (every k-clique lives in the k-truss).
+    degree peel, as supersteps on :class:`SuperstepEngine` (one Spark job
+    per peel round, shuffles sized to the edge count). State: the
+    degree-ORIENTED edges (src > dst) and ``s``, each edge's support in the
+    previous round's graph (k−2 before round one). A round drops the edges
+    with s < k−2, lists the triangles x > y > z of the rest with the
+    oriented two-join (sqrt-bounded fan-out, hub-skew-safe on
+    degree-descending ids) and counts each oriented edge's new support with
+    one partial-agg groupBy; the delta is the count of edges now below
+    k−2, so 0 is the fixpoint. The state stays hash-partitioned on (src,
+    dst), so the closing semi-join and the support join do not shuffle it.
+    Raises if ``max_iters`` rounds end before the fixpoint (a partial peel
+    is a superset of the truss). Standard use: community cores and as an
+    exact reducer for clique queries (every k-clique lives in the k-truss).
     """
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    from peregrine_spark.session import release_checkpoint
 
-    cur = edges.localCheckpoint(eager=True)
-    n = cur.count()
-    for _ in range(max_iters):
-        if n == 0:
-            break
-        e1 = _oriented(cur).alias("e1")
-        e2 = _oriented(cur).alias("e2")
-        e3 = _oriented(cur).alias("e3")
-        tri = (
-            e1.join(
+    def step(state: DataFrame, i: int):
+        cur = state.where(F.col("s") >= k - 2).select("src", "dst")
+        e1, e2, e3 = cur.alias("e1"), cur.alias("e2"), cur.alias("e3")
+        support = (
+            e1.hint("shuffle_hash")
+            .join(
                 e2,
                 (F.col("e1.src") == F.col("e2.src"))
                 & (F.col("e1.dst") > F.col("e2.dst")),
             )
             .join(
-                e3,
+                e3.hint("shuffle_hash"),
                 (F.col("e1.dst") == F.col("e3.src"))
                 & (F.col("e2.dst") == F.col("e3.dst")),
                 "left_semi",
             )
-            .select(
-                F.col("e1.src").alias("x"),
-                F.col("e1.dst").alias("y"),
-                F.col("e2.dst").alias("z"),
-            )
-        )
-        support = (
-            tri.selectExpr(
-                "stack(3, least(x,y), greatest(x,y),"
-                " least(y,z), greatest(y,z),"
-                " least(x,z), greatest(x,z)) as (src, dst)"
+            .selectExpr(
+                "stack(3, e1.src, e1.dst, e1.dst, e2.dst, e1.src, e2.dst) as (src, dst)"
             )
             .groupBy("src", "dst")
             .agg(F.count(F.lit(1)).alias("s"))
-            .where(F.col("s") >= k - 2)
         )
-        nxt = cur.join(
-            support.select("src", "dst"), ["src", "dst"], "left_semi"
-        ).localCheckpoint(eager=True)
-        m = nxt.count()
-        release_checkpoint(cur)
-        cur = nxt
-        if m == n:
-            break
-        n = m
-    return cur
+        new = cur.join(support.hint("shuffle_hash"), ["src", "dst"], "left").select(
+            "src", "dst", F.coalesce("s", F.lit(0)).alias("s")
+        )
+        return new, F.count_if(F.col("s") < k - 2)
+
+    engine = SuperstepEngine(edges.sparkSession)
+    with engine.sized(edges):
+        state0 = _oriented(edges).select("src", "dst", F.lit(k - 2).cast("long").alias("s"))
+        res = engine.run(state0, step, max_iters=max_iters)
+    if not res.converged:
+        release_checkpoint(res.state)
+        raise RuntimeError(
+            f"ktruss: no fixpoint after max_iters={max_iters} peel rounds"
+        )
+    return res.state.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
 def local_clustering(

@@ -8,6 +8,9 @@ shuffle partitions sized to parallelism).
 from __future__ import annotations
 
 import os
+import threading
+import warnings
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -65,9 +68,48 @@ def get_spark(
     return spark
 
 
+_lock = threading.Lock()
+_pins: dict[tuple[int, str], list] = {}  # (session, key) -> [holders, saved value]
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, key: str, value):
+    """Set the session conf ``key`` to ``value`` for the block (no-op if
+    ``value`` is None), safely across threads. A plain save/set/restore per
+    block races: of two overlapping blocks, the later exit can restore the
+    other block's value for good. Holders are counted per (session, key)
+    under one lock; the first saves the value and the last one out
+    restores it (in between, the last value set is what every holder
+    sees — a session conf is global to the session).
+    """
+    if value is None:
+        yield
+        return
+    slot = (id(spark), key)
+    with _lock:
+        pin = _pins.setdefault(slot, [0, spark.conf.get(key, None)])
+        pin[0] += 1
+        spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        with _lock:
+            pin[0] -= 1
+            if pin[0] == 0:
+                del _pins[slot]
+                if pin[1] is None:
+                    spark.conf.unset(key)
+                else:
+                    spark.conf.set(key, pin[1])
+
+
+release_fallbacks = 0  # releases whose plan could not be inspected
+
+
 def release_checkpoint(df) -> None:
     """Release the executor storage behind ``df``, whether it is plan-cached
-    (``persist``) or eagerly ``localCheckpoint``-ed.
+    (``persist``) or eagerly ``localCheckpoint``-ed, also when ``df`` is a
+    projection or filter over the checkpoint.
 
     ``DataFrame.unpersist()`` only uncaches PLAN-cached data. A
     localCheckpoint stores its blocks on the RDD inside the plan's
@@ -79,13 +121,20 @@ def release_checkpoint(df) -> None:
     state-table of blocks PER ROUND for the life of the session — at 100 TB
     that is the difference between bounded and unbounded executor storage.
 
-    Best-effort: quietly does nothing if the plan shape is not a direct
-    checkpoint (nothing to release) or the py4j internals move.
+    The analyzed plan is walked through ``Project``/``Filter`` nodes to its
+    leaf. If the py4j internals move, it warns and counts the miss in
+    ``release_fallbacks``.
     """
+    global release_fallbacks
     df.unpersist()
     try:
         plan = df._jdf.queryExecution().analyzed()
+        while plan.getClass().getSimpleName() in ("Project", "Filter"):
+            plan = plan.child()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
-    except Exception:  # pragma: no cover — best-effort release
-        pass
+    except Exception as exc:
+        with _lock:
+            release_fallbacks += 1
+        warnings.warn(f"release_checkpoint: checkpoint blocks not released ({exc})",
+                      RuntimeWarning, stacklevel=2)

@@ -9,8 +9,9 @@ checkpointed, resumable :class:`SuperstepEngine`.
 
 Scale shape: each superstep joins the FRONTIER (only the vertices settled
 in the previous round) against the symmetrized edge table — never the full
-state — then anti-joins the already-settled set, so per-round shuffle
-volume tracks the frontier boundary, not |V|. All joins/aggregations are
+state — so per-round shuffle volume tracks the frontier boundary, not |V|;
+the reached set settles into the state with one co-partitioned join, and
+the newly-settled count is the observed delta. All joins/aggregations are
 JVM-side column expressions; convergence = empty frontier (exact, the
 north rule's "component assignments exact" discipline applied to hop
 distances).
@@ -23,12 +24,10 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    partitioned_adjacency,
 )
 
 
@@ -44,53 +43,39 @@ def bfs_hops(
     edge table, undirected. State: (v, dist) over ALL vertices, dist null
     while unreached; converged when a superstep settles no new vertex.
 
-    ``sources``: vertex ids (iterable) or a single-column DataFrame. Ids
-    not present in the edge table are ignored (an isolated source has no
-    edges to traverse). Returns the standard engine result — per-superstep
-    metrics carry the frontier size, and ``resume=True`` restarts from the
-    last complete checkpoint like every other vertex program.
+    ``sources``: vertex ids (iterable, duplicates ignored) or a
+    single-column DataFrame. Ids not present in the edge table are ignored
+    (an isolated source has no edges to traverse). Returns the standard
+    engine result — per-superstep metrics carry the newly-settled count as
+    the delta, and ``resume=True`` restarts from the last complete
+    checkpoint like every other vertex program.
     """
     spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
     engine = engine or SuperstepEngine(spark)
-
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col(sources.columns[0]).alias("v")).distinct()
     else:
-        src_df = spark.createDataFrame([(int(s),) for s in sources], "v long")
+        src_df = spark.createDataFrame([(s,) for s in sorted({int(s) for s in sources})], "v long")
 
-    cache_box: list[DataFrame] = []
+    with partitioned_adjacency(edges, engine, n_partitions) as sym:
 
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        frontier = state.where(F.col("dist") == i).select("v")
-        reached = (
-            sym.join(frontier, sym["src"] == frontier["v"])
-            .select(F.col("dst").alias("v"))
-            .distinct()
-        )
-        newly = reached.join(
-            state.where(F.col("dist").isNotNull()).select("v"), "v", "left_anti"
-        ).persist()
-        n_new = newly.count()
-        cache_box.append(newly)
-        new_state = (
-            state.join(
-                newly.select("v", F.lit(i + 1).cast("long").alias("_nd")), "v", "left"
+        def step(state: DataFrame, i: int):
+            frontier = state.where(F.col("dist") == i).select("v")
+            reached = (
+                sym.join(frontier.hint("shuffle_hash"), sym["src"] == frontier["v"])
+                .select(F.col("dst").alias("v"))
+                .distinct()
+                .withColumn("_r", F.lit(True))
             )
-            .select("v", F.coalesce("dist", "_nd").alias("dist"))
-        )
-        return new_state, float(n_new)
+            new = state.join(reached.hint("shuffle_hash"), "v", "left").select(
+                "v",
+                F.coalesce("dist", F.when(F.col("_r"), F.lit(i + 1).cast("long"))).alias("dist"),
+                (F.col("dist").isNull() & F.col("_r").isNotNull()).alias("_new"),
+            )
+            return new, F.count_if("_new")
 
-    with shuffle_partitions(spark, n_part):
         verts = sym.select(F.col("src").alias("v")).distinct()
         state0 = verts.join(src_df.select("v", F.lit(0).alias("_d")), "v", "left").select(
             "v", F.col("_d").cast("long").alias("dist")
         )
-        res = engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    sym.unpersist()
-    return res
+        return engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)

@@ -19,15 +19,14 @@ Two strategies:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    partitioned_adjacency,
 )
 
 
@@ -40,11 +39,11 @@ def connected_components(
     strategy: str = "minprop",
     n_partitions: int | None = None,
 ) -> SuperstepResult:
-    """State: (v, comp). Converged when changed-row count hits 0.
+    """State: (v, comp). Converged when the changed-row count hits 0.
 
-    check_every: the changed-row count (a second pass over the state) runs
-    every k-th superstep; min-propagation is idempotent at fixpoint, so the
-    up-to-k-1 extra supersteps are safe — at scale the saved pass dominates.
+    check_every: ignored — the changed-row count is observed on every
+    superstep's one job at no extra cost; kept so existing callers keep
+    working.
 
     strategy: ``minprop`` (O(diameter) rounds) or ``contraction``
     (large-star/small-star, O(log^2 n) rounds — use for high-diameter
@@ -54,45 +53,26 @@ def connected_components(
         return _cc_contraction(edges, max_iters, engine, resume, n_partitions)
     if strategy != "minprop":
         raise ValueError(f"unknown strategy {strategy!r}")
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
-    engine = engine or SuperstepEngine(spark)
+    engine = engine or SuperstepEngine(edges.sparkSession)
+    with partitioned_adjacency(edges, engine, n_partitions) as sym:
 
-    cache_box: list[DataFrame] = []
-
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        nbr_min = (
-            sym.join(state, sym["src"] == state["v"])
-            .groupBy(F.col("dst").alias("v2"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new = (
-            state.join(nbr_min, state["v"] == F.col("v2"), "left")
-            .select(
-                "v",
-                F.col("comp").alias("old"),
-                F.least("comp", F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
+        def step(state: DataFrame, i: int):
+            nbr_min = (
+                sym.join(state.hint("shuffle_hash"), sym["src"] == state["v"])
+                .groupBy(F.col("dst").alias("v"))
+                .agg(F.min("comp").alias("nbr_comp"))
             )
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "comp"), None
-        new.persist()
-        changed = new.where(F.col("comp") != F.col("old")).count()
-        cache_box.append(new)
-        return new.select("v", "comp"), float(changed)
+            new = state.join(nbr_min.hint("shuffle_hash"), "v", "left").select(
+                "v",
+                F.least("comp", F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
+                F.col("comp").alias("old"),
+            )
+            return new, F.count_if(F.col("comp") != F.col("old"))
 
-    with shuffle_partitions(spark, n_part):
         state0 = sym.select(F.col("src").alias("v")).distinct().select(
             "v", F.col("v").alias("comp")
         )
-        res = engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
-    sym.unpersist()
-    return res
+        return engine.run(state0, step, max_iters=max_iters, tol=0.0, resume=resume)
 
 
 def _large_star(E: DataFrame) -> DataFrame:
@@ -134,38 +114,32 @@ def _cc_contraction(
     the shrinking edge set; convergence = edge set unchanged across a full
     (large, small) round, detected by (count, order-insensitive xor-hash).
     At the fixpoint the edges form stars (v -> component min)."""
-    spark = edges.sparkSession
-    engine = engine or SuperstepEngine(spark)
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    verts = (
-        symmetrized(edges).select(F.col("src").alias("v")).distinct().localCheckpoint()
-    )
+    engine = engine or SuperstepEngine(edges.sparkSession)
     E0 = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).dropDuplicates()
 
-    prev_sig: list = [None]
-    cache_box: list[DataFrame] = []
+    # each round observes its edge set's signature (count, order-insensitive
+    # xor-hash) on the round's own job; the next round compares against it
+    prev: list[Observation] = []
 
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        new = _small_star(_large_star(state)).persist()
-        cache_box.append(new)  # released at the next step (after the engine
-        # has localCheckpointed the returned state off this cache)
-        row = new.agg(
-            F.count(F.lit(1)).alias("c"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        sig = (row["c"], row["h"])
-        delta = 0.0 if sig == prev_sig[0] else 1.0
-        prev_sig[0] = sig
-        return new.select("src", "dst"), delta
+    def step(state: DataFrame, i: int):
+        new = _small_star(_large_star(state))
+        count = F.count(F.lit(1))
+        xor = F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0).cast("long"))
+        same = F.lit(False)
+        if prev:
+            sig = prev.pop().get
+            same = (count == F.lit(sig["c"])) & (xor == F.lit(sig["h"]))
+        prev.append(Observation())
+        new = new.observe(prev[-1], count.alias("c"), xor.alias("h"))
+        return new, F.when(same, 0.0).otherwise(1.0)
 
-    with shuffle_partitions(spark, n_part):
+    with engine.sized(edges, n_partitions):
+        verts = (
+            symmetrized(edges).select(F.col("src").alias("v")).distinct().localCheckpoint()
+        )
         res = engine.run(E0, step, max_iters=max_iters, tol=0.0, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
     E = res.state  # star edges (v, root)
     state = (
         verts.join(E, verts["v"] == E["src"], "left")

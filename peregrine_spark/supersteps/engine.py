@@ -1,10 +1,15 @@
-"""Superstep driver loop: checkpointed, lineage-tracked, resumable iteration.
+"""Superstep driver loop: one Spark job per superstep, checkpointed,
+lineage-tracked, resumable.
 
 The reference's analogue is the per-pattern barrier loop
 (core/Peregrine.hh:1320-1424): workers process a round, hit a barrier, the
-driver advances. Our superstep = one Spark job over the vertex-state
-DataFrame. What the reference does NOT have — and the north rule demands —
-is fault tolerance: every superstep persists
+driver advances. Our superstep = exactly one Spark job over the vertex-state
+DataFrame: the job that materializes the next state (an eager
+``localCheckpoint``, or the parquet checkpoint write). The convergence
+delta is an aggregate attached to that same job with ``DataFrame.observe``,
+so testing convergence every superstep costs no extra pass over the state.
+What the reference does NOT have — and the north rule demands — is fault
+tolerance: every checkpointed superstep persists
 
   * the full vertex state (parquet, atomic via Spark's _SUCCESS marker),
   * per-partition lineage (partition id, row count, order-insensitive
@@ -12,9 +17,10 @@ is fault tolerance: every superstep persists
   * convergence metrics (delta, wall seconds, rows)
 
 to the checkpoint directory, so a killed job resumes mid-iteration from the
-last complete superstep (``resume=True``). Writing state out each superstep
-also truncates the logical plan — without it, iterative DataFrame loops grow
-an exponentially deeper DAG and re-execute the whole history each action.
+last complete superstep (``resume=True``). Materializing state each
+superstep also truncates the logical plan — without it, iterative DataFrame
+loops grow an exponentially deeper DAG and re-execute the whole history
+each action.
 
 At 100 TB this directory would be an Iceberg table (snapshot per superstep);
 in the sandbox it is Iceberg-shaped parquet + a JSONL metrics log.
@@ -24,16 +30,16 @@ from __future__ import annotations
 
 import json
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from peregrine_spark.session import release_checkpoint
+from peregrine_spark.graph.build import symmetrized
+from peregrine_spark.session import pinned_conf, release_checkpoint
 
 
 def auto_shuffle_partitions(
@@ -64,19 +70,25 @@ def auto_shuffle_partitions(
     return int(max(by_cores, n_rows // rows_target, 1))
 
 
-@contextmanager
 def shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin spark.sql.shuffle.partitions (no-op if n is None)."""
-    key = "spark.sql.shuffle.partitions"
-    if n is None:
-        yield
-        return
-    before = spark.conf.get(key)
-    spark.conf.set(key, str(int(n)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
+    """Pin spark.sql.shuffle.partitions for a block (no-op if n is None);
+    thread-safe, see :func:`peregrine_spark.session.pinned_conf`."""
+    return pinned_conf(spark, "spark.sql.shuffle.partitions", None if n is None else int(n))
+
+
+@contextmanager
+def partitioned_adjacency(edges: DataFrame, engine: "SuperstepEngine",
+                          n_partitions: int | None = None):
+    """The symmetrized adjacency of a canonical edge table, hash-partitioned
+    on ``src`` into the :meth:`SuperstepEngine.sized` partition count and
+    persisted for the block, which holds ``sized``: every in-loop join of
+    vertex state (keyed by ``v``) with it is then co-partitioned."""
+    with engine.sized(edges, n_partitions) as n_part:
+        sym = symmetrized(edges).repartition(n_part, "src").persist()
+        try:
+            yield sym
+        finally:
+            sym.unpersist()
 
 
 @dataclass
@@ -106,13 +118,17 @@ def _partition_lineage(state: DataFrame, key_cols: list[str]) -> list[dict]:
 
 
 class SuperstepEngine:
-    """Runs ``state_{i+1} = step_fn(state_i, i)`` to convergence.
+    """Runs ``state_{i+1} = step_fn(state_i, i)`` to convergence, one Spark
+    job per superstep.
 
-    step_fn returns (new_state, delta) where delta is a float convergence
-    measure (L1 change, changed-row count, ...); delta <= tol stops. A step
-    may return delta=None, meaning "convergence not measured this step" —
-    the loop continues and only the plan-truncation job runs (one Spark job
-    per superstep; vertex programs expose ``check_every`` for this).
+    ``step_fn`` returns ``(next_frame, delta)``: ``next_frame`` holds the
+    state columns (those of ``state0``) and may carry helper columns such as
+    the previous value; ``delta`` is an aggregate Column over ``next_frame``
+    (L1 change, changed-row count, ...). The engine attaches ``delta`` to
+    ``next_frame`` with an unnamed ``Observation`` (a fixed name would clash
+    between overlapping runs), projects to the state columns and
+    materializes the result; the observed value arrives with that job.
+    ``delta <= tol`` stops (an empty frame observes 0).
     """
 
     def __init__(
@@ -133,6 +149,22 @@ class SuperstepEngine:
         # handled structurally (chunked CSR blocks, degree orientation).
         # adaptive=True keeps the session setting untouched.
         self.adaptive = adaptive
+
+    def _pinned(self):
+        aqe = None if self.adaptive else "false"
+        return pinned_conf(self.spark, "spark.sql.adaptive.enabled", aqe)
+
+    @contextmanager
+    def sized(self, edges: DataFrame, n_partitions: int | None = None):
+        """Plan the block as the loop plans: AQE off (unless
+        ``adaptive=True``), so a set-up action is one Spark job however many
+        shuffles it has, and spark.sql.shuffle.partitions pinned to
+        ``n_partitions`` (default: :func:`auto_shuffle_partitions` of the
+        symmetrized edge count), which it yields."""
+        with self._pinned():
+            n = n_partitions or auto_shuffle_partitions(self.spark, 2 * edges.count())
+            with shuffle_partitions(self.spark, n):
+                yield n
 
     # -- checkpoint layout -------------------------------------------------
     def _step_path(self, i: int) -> Path:
@@ -157,11 +189,19 @@ class SuperstepEngine:
         i = steps[-1]
         return i, self.spark.read.parquet(str(self._step_path(i)))
 
+    def _commit(self, i: int, frame: DataFrame) -> tuple[DataFrame, list[dict]]:
+        """Write step ``i``'s state to its parquet checkpoint and read it
+        back; returns (state, per-partition lineage)."""
+        path = self._step_path(i)
+        frame.write.mode("overwrite").parquet(str(path))
+        state = self.spark.read.parquet(str(path))
+        return state, _partition_lineage(state, state.columns)
+
     # -- main loop -----------------------------------------------------------
     def run(
         self,
         state0: DataFrame,
-        step_fn: Callable[[DataFrame, int], tuple[DataFrame, float]],
+        step_fn: Callable[[DataFrame, int], tuple[DataFrame, Column]],
         max_iters: int = 20,
         tol: float = 0.0,
         resume: bool = False,
@@ -189,18 +229,10 @@ class SuperstepEngine:
                             metrics=metrics,
                         )
 
-        converged = False
-        i = start_iter - 1
-        aqe_key = "spark.sql.adaptive.enabled"
-        aqe_before = self.spark.conf.get(aqe_key)
-        if not self.adaptive:
-            self.spark.conf.set(aqe_key, "false")
-        try:
+        with self._pinned():
             state, i, converged = self._loop(
                 state, step_fn, start_iter, max_iters, tol, metrics
             )
-        finally:
-            self.spark.conf.set(aqe_key, aqe_before)
         return SuperstepResult(
             state=state, iterations=i + 1, converged=converged, metrics=metrics
         )
@@ -208,26 +240,28 @@ class SuperstepEngine:
     def _loop(self, state, step_fn, start_iter, max_iters, tol, metrics):
         converged = False
         i = start_iter - 1
+        cols = state.columns
         own_ckpt = None  # the engine's own live localCheckpoint, if any
         for i in range(start_iter, max_iters):
             t0 = time.monotonic()
-            new_state, delta = step_fn(state, i)
+            frame, delta = step_fn(state, i)
+            obs = Observation()
+            frame = frame.observe(obs, delta.alias("delta")).select(*cols)
 
-            checked = delta is not None
-            persist = self.dir is not None and (
-                i % self.checkpoint_every == 0
-                or (checked and delta <= tol)
-                or i == max_iters - 1
-            )
-            if persist:
-                path = self._step_path(i)
-                new_state.write.mode("overwrite").parquet(str(path))
-                new_state = self.spark.read.parquet(str(path))
-                lineage = _partition_lineage(new_state, new_state.columns)
+            if self.dir is not None and (
+                i % self.checkpoint_every == 0 or i == max_iters - 1
+            ):
+                new_state, lineage = self._commit(i, frame)
             else:
                 # plan-truncation without durability (intra-checkpoint steps)
-                new_state = new_state.localCheckpoint()
-                lineage = None
+                new_state, lineage = frame.localCheckpoint(), None
+            delta = float(obs.get["delta"] or 0.0)
+            converged = delta <= tol
+            if converged and self.dir is not None and lineage is None:
+                # the final state is always durable: resume is then a no-op
+                ckpt = new_state
+                new_state, lineage = self._commit(i, ckpt)
+                release_checkpoint(ckpt)
             # the new state is materialized (parquet or eager checkpoint) —
             # the PREVIOUS round's engine-made checkpoint blocks are dead
             # weight now; without this every superstep retains one state
@@ -239,11 +273,11 @@ class SuperstepEngine:
             m = {
                 "run_id": self.run_id,
                 "iteration": i,
-                "delta": float(delta) if checked else None,
+                "delta": delta,
                 "seconds": time.monotonic() - t0,
                 "rows": sum(p["rows"] for p in lineage) if lineage else None,
                 "partitions": lineage,
-                "converged": bool(checked and delta <= tol),
+                "converged": converged,
             }
             metrics.append(m)
             if self.dir:
@@ -252,8 +286,7 @@ class SuperstepEngine:
                     f.write(json.dumps(m) + "\n")
 
             state = new_state
-            if checked and delta <= tol:
-                converged = True
+            if converged:
                 break
 
         return state, i, converged

@@ -6,11 +6,20 @@ is the per-pattern barrier loop, core/Peregrine.hh:1320-1424).
 Semantics: damping d (default 0.85), uniform init 1/n over the degree>0
 vertices, rank_{i+1}(v) = (1-d)/n + d * Σ_{u∈N(v)} rank_i(u)/deg(u).
 Undirected (symmetrized) edges ⇒ no dangling vertices. Convergence: L1
-delta ≤ tol. Matches a NumPy/pure-Python oracle to ≤1e-6 (tests).
+delta ≤ tol, observed on every superstep's one job. Matches a
+NumPy/pure-Python oracle to ≤1e-6 (tests).
+
+State schema (both strategies, and so every checkpoint): (v, deg, tp,
+rank). ``tp`` is the per-vertex teleport distribution — uniform 1/n, or
+1/|S| over a source set for personalized PageRank — so the update is
+rank' = (1-d)·tp + d·inflow with no extra join. Checkpoints written before
+``tp`` joined the state, (v, deg, rank), do not resume. Results are
+projected to (v, rank, deg).
 
 Strategy A — ``pagerank`` (pure Catalyst): contribution = ranks ⋈ edges_sym
-on src (shuffle hash join, AQE skew-split), groupBy(dst).sum (map-side
-partial agg absorbs hub fan-in). Simple, whole-stage-codegen'd.
+on src (co-partitioned shuffle hash join: a broadcast would cost a second
+Spark job per superstep), groupBy(dst).sum (map-side partial agg absorbs
+hub fan-in). Simple, whole-stage-codegen'd.
 
 Strategy B — ``pagerank_csr`` (the north-star physical plan): adjacency is
 materialized once as *chunked CSR blocks* — (src, chunk, nbrs array<long>)
@@ -36,8 +45,7 @@ from peregrine_spark.graph.build import symmetrized
 from peregrine_spark.supersteps.engine import (
     SuperstepEngine,
     SuperstepResult,
-    auto_shuffle_partitions,
-    shuffle_partitions,
+    partitioned_adjacency,
 )
 
 
@@ -47,20 +55,12 @@ def _degrees(edges_sym: DataFrame) -> DataFrame:
     )
 
 
-def _init_state(deg: DataFrame) -> tuple[DataFrame, int]:
-    n = deg.count()
-    return (
-        deg.select("v", "deg", (F.lit(1.0) / F.lit(float(n))).alias("rank")),
-        n,
-    )
-
-
-def _init_state_tp(deg: DataFrame, sources) -> DataFrame:
+def _init_state(deg: DataFrame, sources=None) -> DataFrame:
     """State (v, deg, tp, rank) with an explicit per-vertex teleport
-    distribution. ``sources=None`` is classic PageRank (uniform 1/n —
-    identical values to :func:`_init_state`); otherwise teleport mass is
-    1/|S| over the source vertices present in the graph (personalized
-    PageRank / random walk with restart). rank_0 = tp in both cases."""
+    distribution. ``sources=None`` is classic PageRank (uniform 1/n);
+    otherwise teleport mass is 1/|S| over the source vertices present in
+    the graph (personalized PageRank / random walk with restart). rank_0 =
+    tp in both cases."""
     if sources is None:
         n = deg.count()
         tp = F.lit(1.0 / n)
@@ -76,6 +76,27 @@ def _init_state_tp(deg: DataFrame, sources) -> DataFrame:
         raise ValueError("personalized pagerank: no source vertex is in the graph")
     tp = F.when(F.col("_s"), F.lit(1.0 / k)).otherwise(F.lit(0.0))
     return marked.select("v", "deg", tp.alias("tp"), tp.alias("rank"))
+
+
+def _rank_step(contributions, damping: float):
+    """The superstep shared by both strategies: ``contributions(state)``
+    yields (v, inflow); the next frame carries the new rank and the old one
+    for the L1 delta."""
+
+    def step(state: DataFrame, i: int):
+        new = state.join(contributions(state).hint("shuffle_hash"), "v", "left").select(
+            "v",
+            "deg",
+            "tp",
+            (
+                F.lit(1 - damping) * F.col("tp")
+                + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
+            ).alias("rank"),
+            F.col("rank").alias("old"),
+        )
+        return new, F.sum(F.abs(F.col("rank") - F.col("old")))
+
+    return step
 
 
 def pagerank(
@@ -97,61 +118,29 @@ def pagerank(
     teleport column rides in the state, so personalization adds zero
     extra joins per superstep.
 
-    check_every: convergence (L1 delta) is measured every k-th superstep;
-    in between, a superstep is exactly ONE Spark job (the truncation pass)
-    — at scale the delta aggregation is a second full pass over the state,
-    so fixed-iteration runs set this high.
+    check_every: ignored — the L1 delta is observed on every superstep's
+    one job at no extra cost; kept so existing callers keep working.
 
     n_partitions: partition count for the adjacency AND every in-loop
     shuffle (defaults to :func:`auto_shuffle_partitions` of the symmetrized
     edge count — data-sized, not the session default)."""
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges).repartition(n_part, "src").persist()
-    engine = engine or SuperstepEngine(spark)
+    engine = engine or SuperstepEngine(edges.sparkSession)
+    with partitioned_adjacency(edges, engine, n_partitions) as sym:
 
-    cache_box: list[DataFrame] = []
-
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        # previous step's cache is safe to drop once the engine has
-        # truncated/checkpointed that state (i.e. by the time we run again)
-        while cache_box:
-            cache_box.pop().unpersist()
-        contrib = (
-            sym.join(state, sym["src"] == state["v"])
-            .select(F.col("dst").alias("v"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("v")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        new = (
-            state.select("v", "deg", "tp", F.col("rank").alias("old"))
-            .join(contrib, "v", "left")
-            .select(
-                "v",
-                "deg",
-                "tp",
-                (
-                    F.lit(1 - damping) * F.col("tp")
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-                "old",
+        def contributions(state: DataFrame) -> DataFrame:
+            return (
+                sym.join(state.hint("shuffle_hash"), sym["src"] == state["v"])
+                .select(F.col("dst").alias("v"), (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("v")
+                .agg(F.sum("c").alias("inflow"))
             )
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "deg", "tp", "rank"), None
-        new.persist()
-        delta = new.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).collect()[0][0]
-        cache_box.append(new)
-        out = new.select("v", "deg", "tp", "rank")
-        return out, float(delta or 0.0)
 
-    with shuffle_partitions(spark, n_part):
-        state0 = _init_state_tp(_degrees(sym), sources)
-        res = engine.run(state0, step, max_iters=max_iters, tol=tol, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
+        state0 = _init_state(_degrees(sym), sources)
+        res = engine.run(
+            state0, _rank_step(contributions, damping), max_iters=max_iters,
+            tol=tol, resume=resume,
+        )
     res.state = res.state.select("v", "rank", "deg")
-    sym.unpersist()
     return res
 
 
@@ -190,21 +179,9 @@ def pagerank_csr(
     check_every: int = 1,
     n_partitions: int | None = None,
 ) -> SuperstepResult:
-    """Strategy B: chunked-CSR Arrow kernel supersteps."""
-    spark = edges.sparkSession
-    n_part = n_partitions or auto_shuffle_partitions(spark, 2 * edges.count())
-    sym = symmetrized(edges)
-    with shuffle_partitions(spark, n_part):
-        blocks = (
-            build_adjacency_blocks(sym, chunk_size)
-            .repartition(n_part, "src")
-            .persist()
-        )
-        deg = blocks.groupBy(F.col("src").alias("v")).agg(
-            F.sum(F.size("nbrs")).alias("deg")
-        )
-        state0, n = _init_state(deg)
-    engine = engine or SuperstepEngine(spark)
+    """Strategy B: chunked-CSR Arrow kernel supersteps (``check_every`` is
+    ignored, as in :func:`pagerank`)."""
+    engine = engine or SuperstepEngine(edges.sparkSession)
 
     def gather_scatter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -220,43 +197,30 @@ def pagerank_csr(
             partial = np.bincount(inv, weights=shares, minlength=len(uniq))
             yield pd.DataFrame({"v": uniq.astype(np.int64), "inflow": partial})
 
-    cache_box: list[DataFrame] = []
+    with engine.sized(edges, n_partitions) as n_part:
+        blocks = (
+            build_adjacency_blocks(symmetrized(edges), chunk_size)
+            .repartition(n_part, "src")
+            .persist()
+        )
 
-    def step(state: DataFrame, i: int) -> tuple[DataFrame, float]:
-        while cache_box:
-            cache_box.pop().unpersist()
-        joined = blocks.join(state, blocks["src"] == state["v"]).select(
-            "nbrs", "rank", state["deg"].alias("deg")
-        )
-        contrib = (
-            joined.mapInPandas(gather_scatter, schema="v long, inflow double")
-            .groupBy("v")
-            .agg(F.sum("inflow").alias("inflow"))
-        )
-        new = (
-            state.select("v", "deg", F.col("rank").alias("old"))
-            .join(contrib, "v", "left")
-            .select(
-                "v",
-                "deg",
-                (
-                    F.lit((1 - damping) / n)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0))
-                ).alias("rank"),
-                "old",
+        def contributions(state: DataFrame) -> DataFrame:
+            joined = blocks.join(
+                state.hint("shuffle_hash"), blocks["src"] == state["v"]
+            ).select("nbrs", "rank", state["deg"].alias("deg"))
+            return (
+                joined.mapInPandas(gather_scatter, schema="v long, inflow double")
+                .groupBy("v")
+                .agg(F.sum("inflow").alias("inflow"))
             )
-        )
-        if (i + 1) % check_every and i != max_iters - 1:
-            return new.select("v", "deg", "rank"), None
-        new.persist()
-        delta = new.agg(F.sum(F.abs(F.col("rank") - F.col("old")))).collect()[0][0]
-        cache_box.append(new)
-        return new.select("v", "deg", "rank"), float(delta or 0.0)
 
-    with shuffle_partitions(spark, n_part):
-        res = engine.run(state0, step, max_iters=max_iters, tol=tol, resume=resume)
-    while cache_box:
-        cache_box.pop().unpersist()
+        deg = blocks.groupBy(F.col("src").alias("v")).agg(
+            F.sum(F.size("nbrs")).alias("deg")
+        )
+        res = engine.run(
+            _init_state(deg), _rank_step(contributions, damping),
+            max_iters=max_iters, tol=tol, resume=resume,
+        )
     res.state = res.state.select("v", "rank", "deg")
     blocks.unpersist()
     return res

@@ -7,6 +7,7 @@ vectors vs golden truth) — truth here comes from exhaustive enumeration.
 
 import itertools
 import math
+from pathlib import Path
 
 import pytest
 
@@ -17,6 +18,8 @@ from peregrine_spark.patterns.canonical import canonical_form
 
 from tests.conftest import edges_df
 from tests.oracle import brute_count, brute_induced_counts, er_graph
+
+DATA = Path(__file__).parent / "data"
 
 
 def K(n):
@@ -65,6 +68,18 @@ def test_ktruss_closed_forms(spark):
     assert got == {(1, 2), (1, 3), (2, 3)}
     with pytest.raises(ValueError):
         ktruss(edges_df(spark, ring), 2)
+
+
+def test_ktruss_raises_without_fixpoint(spark):
+    """K5 plus a pendant edge needs two peel rounds at k=5 (drop the
+    pendant, then confirm the fixpoint); one round is a superset of the
+    truss, which must raise rather than be returned."""
+    from peregrine_spark.operators.triangles import ktruss
+
+    e = edges_df(spark, K(5) + [(5, 6)])
+    with pytest.raises(RuntimeError, match="max_iters=1"):
+        ktruss(e, 5, max_iters=1)
+    assert ktruss(e, 5, max_iters=2).count() == 10
 
 
 def test_local_clustering_vs_brute(spark):
@@ -141,7 +156,7 @@ def test_every_4_pattern_edge_induced_oracle(spark):
 
 
 def test_p1_reference_pattern_oracle(spark):
-    p1 = SmallGraph.from_file("/root/reference/query/p1.graph")
+    p1 = SmallGraph.from_file(DATA / "p1.graph")
     pairs = er_graph(18, 0.3, seed=5)
     [(_, c)] = count(edges_df(spark, pairs), p1)
     assert c == brute_count(pairs, p1)

@@ -4,6 +4,7 @@ Mirrors core/unittests/{Graph,PatternGenerator}_test.hh coverage.
 """
 
 import itertools
+from pathlib import Path
 
 from peregrine_spark.patterns import (
     PatternGenerator,
@@ -15,6 +16,8 @@ from peregrine_spark.patterns import (
 )
 from peregrine_spark.plans.compiler import matching_order
 from peregrine_spark.plans.counts import convert_counts, num_mappings
+
+DATA = Path(__file__).parent / "data"
 
 
 def test_generators():
@@ -55,7 +58,7 @@ def test_symmetry_conditions_known():
         PatternGenerator.cycle(4),
         PatternGenerator.cycle(5),
         PatternGenerator.chain(5),
-        SmallGraph.from_file("/root/reference/query/p1.graph"),
+        SmallGraph.from_file(DATA / "p1.graph"),
     ]:
         conds = symmetry_conditions(g)
         auts = automorphisms(g)
@@ -73,7 +76,7 @@ def test_symmetry_conditions_known():
 def test_automorphism_sets():
     assert automorphism_sets(PatternGenerator.star(4)) == [[1], [2, 3, 4]]
     assert automorphism_sets(PatternGenerator.clique(3)) == [[1, 2, 3]]
-    p1 = SmallGraph.from_file("/root/reference/query/p1.graph")
+    p1 = SmallGraph.from_file(DATA / "p1.graph")
     assert automorphism_sets(p1) == [[1, 3], [2, 4]]
 
 
@@ -110,9 +113,9 @@ def test_num_mappings_and_convert():
 
 
 def test_parse_reference_pattern_files():
-    p1 = SmallGraph.from_file("/root/reference/query/p1.graph")
+    p1 = SmallGraph.from_file(DATA / "p1.graph")
     assert p1.num_vertices == 4 and p1.num_true_edges == 5
-    p2 = SmallGraph.from_file("/root/reference/query/p2-mi.graph")
+    p2 = SmallGraph.from_file(DATA / "labelled5.graph")
     assert p2.labelling().value == "labelled"
     assert p2.num_vertices == 5 and p2.num_true_edges == 5
 

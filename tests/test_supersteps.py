@@ -262,14 +262,18 @@ def test_checkpoint_resume_equivalence(spark, tmp_path):
 def test_resume_after_convergence_is_noop(spark, tmp_path):
     pairs, _ = two_cliques_bridge()
     e = edges_df(spark, pairs)
-    eng = SuperstepEngine(spark, str(tmp_path), run_id="cc")
-    r1 = connected_components(e, engine=eng)
-    assert r1.converged
-    r2 = connected_components(e, engine=eng, resume=True)
-    assert r2.converged
-    assert {tuple(r) for r in r1.state.collect()} == {
-        tuple(r) for r in r2.state.collect()
-    }
+    # checkpoint_every=100: the converged step is made durable anyway
+    for every in (1, 100):
+        eng = SuperstepEngine(spark, str(tmp_path / str(every)), run_id="cc",
+                              checkpoint_every=every)
+        r1 = connected_components(e, engine=eng)
+        assert r1.converged
+        assert eng._complete_steps()[-1] == r1.iterations - 1
+        r2 = connected_components(e, engine=eng, resume=True)
+        assert r2.converged and r2.iterations == r1.iterations
+        assert {tuple(r) for r in r1.state.collect()} == {
+            tuple(r) for r in r2.state.collect()
+        }
 
 
 def test_cc_contraction_matches_minprop(spark):
@@ -319,6 +323,47 @@ def test_shuffle_partitions_context_restores(spark):
     assert spark.conf.get(key) == before
     with shuffle_partitions(spark, None):
         assert spark.conf.get(key) == before
+
+
+def test_pinned_conf_restores_under_thread_interleaving():
+    """16 threads pin two keys (one unset beforehand) with their own
+    values, nested, with the switch interval shortened so they interleave:
+    whichever thread leaves last, both keys end as they began."""
+    import sys
+    import threading
+
+    from peregrine_spark.session import pinned_conf
+
+    class Conf(dict):
+        def set(self, k, v):
+            self[k] = v
+
+        def unset(self, k):
+            del self[k]
+
+    class Session:
+        conf = Conf(shuffle="8")
+
+    spark = Session()
+
+    def work(n):
+        for _ in range(200):
+            with pinned_conf(spark, "shuffle", n), pinned_conf(spark, "extra", n):
+                with pinned_conf(spark, "shuffle", n + 1):
+                    assert spark.conf["shuffle"] is not None
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(n,)) for n in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert spark.conf == {"shuffle": "8"}
 
 
 def test_operators_accept_pinned_partitions(spark):
@@ -400,3 +445,77 @@ def test_superstep_engine_releases_checkpoints(spark):
     # at most the FINAL state's checkpoint may remain live (the caller owns
     # the result); the 11 superseded rounds must all be gone
     assert len(after - before) <= 1, after - before
+
+
+def test_release_checkpoint_behind_projection(spark):
+    """A checkpoint reached through a projection or filter (what ktruss
+    and the vertex programs return) is released too."""
+    from peregrine_spark.session import release_checkpoint
+
+    def n_persistent():
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    df = spark.range(100).selectExpr("id AS v", "id % 7 AS x")
+    for view in (lambda c: c.select("v"), lambda c: c.where("x > 2").select("x")):
+        ckpt = df.localCheckpoint()
+        before = n_persistent()
+        release_checkpoint(view(ckpt))
+        assert n_persistent() < before
+
+
+def test_vertex_programs_restore_session_conf_across_threads(spark):
+    """Two vertex programs pinning AQE and the shuffle partition count from
+    two threads leave both confs as they found them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = {k: spark.conf.get(k) for k in keys}
+    e = edges_df(spark, er_graph(30, 0.15, seed=61))
+    with ThreadPoolExecutor(2) as pool:
+        for _ in range(3):
+            runs = [
+                pool.submit(pagerank, e, max_iters=3, tol=-1.0, n_partitions=3),
+                pool.submit(connected_components, e, n_partitions=2),
+            ]
+            for r in runs:
+                r.result()
+    assert {k: spark.conf.get(k) for k in keys} == before
+
+
+def _jobs_of(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_one_spark_job_per_superstep(spark):
+    """A superstep is one Spark job: the convergence delta rides on the
+    materializing job, and no in-loop join plans a broadcast. Set-up (edge
+    count, vertex count) may add a few."""
+    from peregrine_spark.operators.triangles import ktruss
+
+    e = edges_df(spark, er_graph(40, 0.15, seed=71))
+    e.count()
+    res, jobs = _jobs_of(spark, "pr5", lambda: pagerank(e, max_iters=5, tol=-1.0))
+    assert res.iterations == 5 and jobs <= 5 + 3, jobs
+
+    k5_pendant = list(itertools.combinations(range(1, 6), 2)) + [(5, 6)]
+    e = edges_df(spark, k5_pendant)
+    e.count()
+    rounds = 2  # drop the pendant, then confirm the fixpoint
+    out, jobs = _jobs_of(spark, "kt", lambda: ktruss(e, 5))
+    assert jobs <= rounds + 3, jobs
+    assert out.count() == 10
+
+
+def test_bfs_duplicate_sources(spark):
+    pairs = er_graph(30, 0.1, seed=67)
+    e = edges_df(spark, pairs)
+    once = bfs_hops(e, [1, 20], max_iters=40).state.collect()
+    twice = bfs_hops(e, [20, 1, 1, 20, 1], max_iters=40).state.collect()
+    assert sorted(map(tuple, twice)) == sorted(map(tuple, once))
+    assert len(twice) == len({r["v"] for r in twice}) == len({v for p in pairs for v in p})
